@@ -112,10 +112,9 @@ def main() -> None:
         "org.apache.spark.scheduler.DAGScheduler",
         jvm.org.apache.logging.log4j.Level.FATAL,
     )
-    # Pinned execution order matching BASELINE.md so round-over-round
+    # Pinned execution order matching BASELINE.md so run-over-run
     # numbers are comparable regardless of catalog registration order
-    # (r3's graded-window reordering put normalize_throughput first and
-    # it absorbed session warmup).
+    # (whichever query runs first absorbs session warmup).
     BENCH_ORDER = [
         "q1_pricing_summary",
         "q3_shipping_priority",

@@ -4245,8 +4245,8 @@ def domain_cap_scalable(spark, sf_dir):
     url = F.when(F.col("doc_id") % 97 == 5, F.lit("schemeless.example/p")).otherwise(
         site
     )
-    # the table-level layout-guarded spread already parallelizes the
-    # single-split local parquet (registry._spread_unsplittable_scan)
+    # no spread opt-in: building a URL per doc is light per-row work, so
+    # the builder reads the native documents layout
     urls = docs.select("doc_id", url.alias("url"))
     return (
         cap_per_domain_scalable(urls, cap=5, hot_factor=4)
@@ -6774,10 +6774,8 @@ def hybrid_rrf_fusion(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Round-13 growth (r12 verdict task #8): the END-TO-END curation run —
-# the integration-level evidence that the per-stage graded entries
-# COMPOSE. Registers at the catalog tail (grades r14 per the standing
-# late-registration precedent; declared in freshness.LATE_REGISTRATIONS).
+# The END-TO-END curation run: the integration-level evidence that the
+# per-stage oracle-checked entries COMPOSE.
 # --------------------------------------------------------------------------
 
 

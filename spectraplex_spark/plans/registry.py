@@ -11,14 +11,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 _SIZE_UNITS = {"k": 1024, "m": 1024**2, "g": 1024**3}
 
-# Default rows-per-task floor for the opt-in scan spread: a spread
-# never splits a table finer than this many rows per partition, so a
-# 5k-row table tops out at ~20 partitions instead of always paying a
-# defaultParallelism-way exchange (the r14 table-level spread regressed
-# every light consumer at local[32] — driver PERF_r14: dedup 0.38×,
-# corpus 0.64×, with the 8-core bench BEATING the 32-core bench).
-# Env-tunable so cluster deployments can match their per-task overhead.
-_SPREAD_MIN_ROWS_PER_TASK = int(os.environ.get("SPARK_GRAFT_SPREAD_ROWS", "256"))
+# Rows-per-task floor for the opt-in scan spread: a spread never splits
+# a table finer than this many rows per partition, so a 5k-row table
+# tops out at ~20 partitions instead of always paying a
+# defaultParallelism-way exchange (a table-level spread regressed every
+# light consumer at local[32]: dedup 0.38×, corpus 0.64×, with an 8-core
+# run beating the 32-core one).
+_SPREAD_MIN_ROWS_PER_TASK = 256
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:

@@ -18,6 +18,19 @@ from pyspark.sql import SparkSession
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at least 1g and at most 48g.
+
+    Local mode runs the whole engine in one JVM; a heap ceiling above the
+    host's memory lets G1 keep growing the heap until the kernel's OOM
+    killer takes the JVM (a 48g ceiling on a 15 GB host did)."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "48g"
+    return f"{max(1, min(48, total // 2 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "spectraplex_spark",
     shuffle_partitions: int | None = None,
@@ -47,7 +60,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

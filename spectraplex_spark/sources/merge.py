@@ -39,6 +39,7 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from spectraplex_spark.sources.commit import (
     TableInconsistentError,
@@ -64,100 +65,12 @@ def _escape_path_name(name: str) -> str:
     )
 
 
-def _partition_dir(partition_col: str, value) -> str:
+def _partition_dir(partition_col: str, value: str | None) -> str:
     """The directory name Spark's writer produces for this partition
-    value — Hive path escaping plus the NULL/empty sentinel, booleans
-    lowercased the way Spark stringifies them."""
+    value text — Hive path escaping plus the NULL/empty sentinel."""
     if value is None or value == "":
         return f"{_escape_path_name(partition_col)}={_HIVE_NULL_PART}"
-    s = ("true" if value else "false") if isinstance(value, bool) else str(value)
-    return f"{_escape_path_name(partition_col)}={_escape_path_name(s)}"
-
-
-def _inference_safe(text: str) -> bool:
-    """True iff a partition directory's value text survives Spark's
-    partition-type inference and comes back with the SAME lexical form.
-
-    Numeric-LOOKING strings that don't round-trip ('01', '+1', '1.10')
-    are the poison case: the reader infers 1 / 1.1, every predicted
-    directory name drifts from the real one, and the staged cross-checks
-    can't see it because prediction and staged output drift TOGETHER —
-    the old partition would silently survive the swap (review finding).
-    """
-    import re
-
-    if re.fullmatch(r"[+-]?\d+", text):
-        if len(text.lstrip("+-")) > 38:
-            # exceeds DECIMAL(38): Spark falls through to DOUBLE and the
-            # value reads back as '1e+41'-style scientific notation —
-            # permanent lexical drift (review finding r13, verified on
-            # Spark 4.1.2)
-            return False
-        try:
-            return str(int(text)) == text
-        except ValueError:  # pragma: no cover - astronomically long digits
-            return False
-    # DATE / TIMESTAMP inference (review finding r13): Spark also tries
-    # both on partition values.  The drift class, pinned by a probe
-    # matrix on Spark 4.1.2 (BASELINE.md r13): a padded timestamp with
-    # a SINGLE-digit fraction infers as TIMESTAMP and its read-back
-    # str() emits 6-digit microseconds ('...56.5' → '...56.500000',
-    # '...56.0' → '...56') — permanent lexical drift.  Everything else
-    # date/timestamp-shaped either round-trips (padded dates,
-    # seconds-precision timestamps) or is NOT inferred at all and
-    # survives as the identical string (probed: '2024-1-1', 2+-digit
-    # fractions incl. '.500000'/'.000000', 'T' separator, no-seconds,
-    # unpadded hour, leading/trailing whitespace, invalid months).
-    m = re.fullmatch(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(\.(\d+))?", text)
-    if m:
-        frac = m.group(2)
-        return frac is None or len(frac) != 1
-    # Spark's fallback is Double.parseDouble, which ALSO accepts
-    # exponent-only forms without a dot ('1e5' → 100000.0) and the
-    # Infinity/NaN spellings — all of which drift on read-back, so they
-    # must hit the float round-trip check / hard reject too (r11 ADVICE:
-    # the old pattern required a decimal point and let '1e5' through).
-    num = r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?"
-
-    def java_double_parses(t: str) -> bool:
-        """Whether Double.parseDouble accepts ``t`` (pre-trimmed): the
-        Double.valueOf grammar — EXACT-case NaN/Infinity (parseDouble
-        is case-sensitive: 'nan'/'inf'/'INFINITY' all throw and stay
-        safe strings), decimal forms with an optional f/F/d/D type
-        suffix ('123d' → 123.0; the suffix attaches to NUMERIC
-        literals only, so 'NaNd' does NOT parse), and hexadecimal
-        float literals ('0x1p3' → 8.0)."""
-        if re.fullmatch(r"[+-]?(Infinity|NaN)", t):
-            return True
-        core = t[:-1] if t and t[-1] in "fFdD" else t
-        if re.fullmatch(num, core):
-            return True
-        return bool(
-            re.fullmatch(r"[+-]?0[xX][0-9a-fA-F]*\.?[0-9a-fA-F]*[pP][+-]?\d+", core)
-        )
-
-    # parseDouble TRIMS like String.trim (chars ≤ U+0020) before
-    # parsing, while int/long/decimal inference throws on whitespace —
-    # so ' 1' infers as DOUBLE 1.0 and the directory name drifts.  Any
-    # whitespace-wrapped value whose trimmed core parses is unsafe;
-    # a trimmed core that does NOT parse falls through every inference
-    # and survives as the identical string.
-    trimmed = re.sub(r"^[\x00-\x20]+|[\x00-\x20]+$", "", text)
-    if trimmed != text:
-        # (date/timestamp inference does NOT trim — probed: a
-        # whitespace-wrapped date survives as the identical string —
-        # so only the parseDouble trim matters here)
-        return not java_double_parses(trimmed)
-    if re.fullmatch(r"[+-]?(Infinity|NaN)", text):
-        return False  # reads back as Infinity/NaN, not the string
-    if java_double_parses(text) and not re.fullmatch(num, text):
-        return False  # suffix / hex forms: str(float) never emits them
-    if re.fullmatch(num, text) and ("." in text or "e" in text or "E" in text):
-        try:
-            return str(float(text)) == text
-        except (ValueError, OverflowError):
-            return False
-    return True
+    return f"{_escape_path_name(partition_col)}={_escape_path_name(value)}"
 
 
 def _write_intent(staged_dir: str, intent: dict) -> None:
@@ -256,38 +169,39 @@ def _merge_upsert_impl(
             "delete would silently no-op) — repair or drop those rows."
         )
     target = spark.read.parquet(target_path)
+    if partition_col is not None:
+        # Read the partition column as its directory TEXT: type inference
+        # would turn 'part=00' / '1.10' / '+1' into 0 / 1.1 / 1, and every
+        # directory name derived from a read-back value would drift from
+        # the real one. The updates get the same string cast Spark's
+        # writer applies when it names partition directories.
+        target = spark.read.schema(
+            StructType(
+                [
+                    StructField(f.name, StringType()) if f.name == partition_col else f
+                    for f in target.schema.fields
+                ]
+            )
+        ).parquet(target_path)
+        updates = updates.withColumn(
+            partition_col, F.col(partition_col).cast(StringType())
+        )
     upserts = updates.filter(F.col(OP_COL) == "upsert").drop(OP_COL)
-    # Schema guard (review finding r13, the idempotent_append rule for
-    # the REWRITE path): unionByName silently coerces mismatched column
-    # types (long+double → double; long+string → bigint with
-    # unparseable payloads becoming NULL — verified on Spark 4.1.2), so
-    # a drifted updates batch would rewrite the affected partitions
-    # under a forked parquet schema and corrupt later whole-table reads.
-    # The partition column compares by NAME only (the idempotent_append
-    # rule): its read-back type comes from partition-value INFERENCE —
-    # a NULL-only partition reads back NullType, numeric-looking values
-    # read back int/date — which legitimately differs from the written
-    # type without any payload hazard.
-    tgt_types = {
-        f.name: f.dataType
-        for f in target.schema.fields
-        if f.name != partition_col
-    }
-    upd_types = {
-        f.name: f.dataType
-        for f in upserts.schema.fields
-        if f.name != partition_col
-    }
-    if tgt_types != upd_types or {f.name for f in target.schema.fields} != {
-        f.name for f in upserts.schema.fields
-    }:
-        diffs = sorted(set(tgt_types) | set(upd_types))
+    # Schema guard (the idempotent_append rule for the REWRITE path):
+    # unionByName silently coerces mismatched column types (long+double
+    # → double; long+string → bigint with unparseable payloads becoming
+    # NULL), so a drifted updates batch would rewrite the affected
+    # partitions under a forked parquet schema and corrupt later
+    # whole-table reads.
+    tgt_types = {f.name: f.dataType for f in target.schema.fields}
+    upd_types = {f.name: f.dataType for f in upserts.schema.fields}
+    if tgt_types != upd_types:
         detail = ", ".join(
             f"{c}: target={tgt_types.get(c, '<absent>')} "
             f"updates={upd_types.get(c, '<absent>')}"
-            for c in diffs
+            for c in sorted(set(tgt_types) | set(upd_types))
             if tgt_types.get(c) != upd_types.get(c)
-        ) or "column name sets differ"
+        )
         raise TableInconsistentError(
             f"{target_path}: updates schema does not match the target "
             f"({detail}) — unionByName would silently coerce and fork "
@@ -298,28 +212,6 @@ def _merge_upsert_impl(
     n_del = n_updates - n_up
 
     if partition_col is not None:
-        # refuse partition values whose directory text would not survive
-        # partition-type inference: every downstream prediction
-        # (_partition_dir over READ-BACK values) would silently drift
-        from urllib.parse import unquote
-
-        prefix = f"{_escape_path_name(partition_col)}="
-        for d in os.listdir(target_path):
-            if not d.startswith(prefix) or not os.path.isdir(
-                os.path.join(target_path, d)
-            ):
-                continue
-            text = unquote(d[len(prefix):])
-            if text != _HIVE_NULL_PART and not _inference_safe(text):
-                raise TableInconsistentError(
-                    f"{target_path}: partition directory {d!r} holds a "
-                    f"value ({text!r}) that Spark's partition-type "
-                    "inference canonicalizes to a different lexical form "
-                    "— the partition-scoped swap cannot predict directory "
-                    "names for this table. Store the value in canonical "
-                    "form (e.g. no leading zeros) or merge with "
-                    "partition_col=None (whole-table swap)."
-                )
         parts = updates.select(F.col(partition_col).alias("_p")).distinct()
         if probe_moved_keys:
             # key-probe: partitions where the updated keys CURRENTLY

@@ -82,7 +82,7 @@ def build_replicated(spark, factor: int = FACTOR) -> None:
 def main() -> None:
     sys.path.insert(0, "/root/repo")
     import bench  # reuse run_query/_drop_cached and the session recipe
-    from spectraplex_spark.plans import ALL_QUERIES as CATALOG
+    from spectraplex_spark.plans import CATALOG
     from spectraplex_spark.session import get_spark
 
     spark = get_spark(

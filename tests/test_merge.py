@@ -251,29 +251,97 @@ def test_merge_refuses_epoch_tables(spark, tmp_path):
         merge_upsert(spark, t, upd, "k")
 
 
-def test_merge_refuses_inference_unsafe_partition_values(spark, tmp_path):
-    """A 'part=01' directory reads back as int 1, so every directory
-    prediction drifts and the old partition would silently survive the
-    swap — the merge must refuse such tables loudly (review finding)."""
-    import pytest as _pytest
+# Partition values whose directory text Spark's partition-type inference
+# rewrites on read, beside look-alikes it leaves alone. Inference types a
+# column by the common type of ALL its values and keeps the raw text only
+# when that type is string, so the hazard needs a table whose values share
+# a non-string type: one table per family. Each family names the key's
+# partition to move out of and the one to move it into.
+_INFERENCE_FAMILIES = {
+    # int/decimal(38,0): '01' and '+1' come back as 1
+    "integer": (["01", "02", "+1", "1", "9" * 38], "01", "02"),
+    # decimal: integral exponent spellings come back expanded
+    "exponent": (["1e5", "1E5", "+3e4", "-1e2", "12e0", "7"], "1e5", "1E5"),
+    # double, incl. parseDouble's Inf/NaN, type-suffix, hex and
+    # whitespace-trimmed spellings, and integers past DECIMAL(38)
+    "double": (
+        [
+            "1.10", "1.5", "2e-3",
+            "Infinity", "-Infinity", "+Infinity", "NaN",
+            "123d", "1.5f", "2e3D", "-7F",
+            "0x1p3", "0X1.8p1", "-0x1p-2", "0x1p3f",
+            " 1", "1.5 ", " 2e3 ", " 0x1p3 ", " 7d",
+            "9" * 41, "1" * 39,
+        ],
+        "1.10",
+        "2e-3",
+    ),
+    # timestamp: a single-digit fraction comes back with six digits
+    "timestamp": (
+        [
+            "2024-01-01 12:34:56.5", "2024-01-01 12:34:56.0",
+            "1999-12-31 23:59:59.9", "2024-01-01 12:34:56",
+            "2024-01-01", "0001-01-01",
+        ],
+        "2024-01-01 12:34:56.5",
+        "2024-01-01 12:34:56.0",
+    ),
+    # spellings inference leaves as strings
+    "string": (
+        [
+            "abc", "e5", "nano", "infra", "d", "f", "1dd", "x1p3", "0x1p",
+            "id", "worldF", "NaNd", "Infinityf", "nan", "inf", "Inf", "-inf",
+            "INFINITY", "nAn", " abc ", " nan ", "\tNaN", "2024-13-01",
+            "2024-1-1", "2024-01-01T12:34:56", "2024-01-01 12:34",
+            " 2024-01-01", "2024-01-01 2:34:56", "2024-01-01 12:34:56.50",
+            "2024-01-01 12:34:56.500000", "2024-01-01 12:34:56.000000",
+        ],
+        "abc",
+        "nan",
+    ),
+}
 
-    from spectraplex_spark.sources.merge import _inference_safe, merge_upsert
 
-    assert _inference_safe("2024-01-01") and _inference_safe("abc")
-    assert _inference_safe("1") and _inference_safe("1.5")
-    assert not _inference_safe("01")
-    assert not _inference_safe("+1")
-    assert not _inference_safe("1.10")
-
+@pytest.mark.parametrize("family", sorted(_INFERENCE_FAMILIES))
+def test_merge_round_trips_inference_prone_partition_values(spark, tmp_path, family):
+    """The partition-scoped swap works on the directory TEXT, so values
+    type inference would rewrite ('01', '+1', '1.10', '1e5', ...) are
+    rewritten in place, and a key moved out of its partition leaves no
+    stale copy behind: the exact rows and the exact directory set come
+    back."""
+    values, move_from, move_to = _INFERENCE_FAMILIES[family]
+    assert len(set(values)) == len(values)
     t = str(tmp_path / "t")
     spark.createDataFrame(
-        [(1, "01"), (2, "02")], "k long, p string"
+        [(k, f"v{k}", v) for k, v in enumerate(values)], "k long, v string, p string"
     ).write.partitionBy("p").parquet(t)
-    upd = spark.createDataFrame(
-        [(1, "02", "upsert")], "k long, p string, _op string"
+    moved = values.index(move_from)
+    in_place = [k for k in range(len(values)) if k % 3 == 0 and k != moved]
+    updates = spark.createDataFrame(
+        [(k, f"v{k}_new", values[k], "upsert") for k in in_place]
+        + [(moved, f"v{moved}_moved", move_to, "upsert")],
+        "k long, v string, p string, _op string",
     )
-    with _pytest.raises(Exception, match="inference"):
-        merge_upsert(spark, t, upd, "k", partition_col="p")
+    stats = merge_upsert(spark, t, updates, "k", partition_col="p")
+    assert stats == {
+        "upserted": len(in_place) + 1,
+        "deleted": 0,
+        "partitions_rewritten": len({values[k] for k in in_place} | {move_from, move_to}),
+    }
+    want = {(k, f"v{k}", v) for k, v in enumerate(values)}
+    want -= {(k, f"v{k}", values[k]) for k in [*in_place, moved]}
+    want |= {(k, f"v{k}_new", values[k]) for k in in_place}
+    want.add((moved, f"v{moved}_moved", move_to))
+    back = spark.read.schema("k long, v string, p string").parquet(t)
+    assert {(r["k"], r["v"], r["p"]) for r in back.collect()} == want
+    # Spark's writer escapes the tab and the colons; no other character
+    # here needs it
+    assert {d for d in os.listdir(t) if d.startswith("p=")} == {
+        "p=" + v.replace("\t", "%09").replace(":", "%3A")
+        for v in values
+        if v != move_from
+    }
+    assert not [d for d in os.listdir(tmp_path) if "__staged" in d]
 
 
 def test_recover_whole_forward_rename_before_intent_removal(spark, tmp_path):
@@ -300,39 +368,6 @@ def test_recover_whole_forward_rename_before_intent_removal(spark, tmp_path):
     assert recover_merge(t) == "whole-forward"
     assert not os.path.exists(os.path.join(t, INTENT_NAME))
     assert spark.read.parquet(t).count() == 3
-
-
-def test_inference_safe_rejects_exponent_and_inf_nan_spellings():
-    """r11 ADVICE: Spark's partition-type fallback is Double.parseDouble,
-    which also accepts exponent-only forms without a dot ('1e5' →
-    100000.0) and Infinity/NaN spellings — every one must be rejected
-    (none round-trips to the same lexical form)."""
-    from spectraplex_spark.sources.merge import _inference_safe
-
-    for poison in (
-        "1e5", "1E5", "2e-3", "+3e4", "-1e2", "12e0",
-        "Infinity", "-Infinity", "+Infinity", "NaN",
-        # parseDouble type suffixes and hex-float literals (same class)
-        "123d", "1.5f", "2e3D", "-7F",
-        "0x1p3", "0X1.8p1", "-0x1p-2", "0x1p3f",
-        # parseDouble TRIMS (String.trim) while int/decimal inference
-        # throws on whitespace: wrapped numerics infer as DOUBLE
-        " 1", "1.5 ", " 2e3 ", "\tNaN", " 0x1p3 ", " 7d",
-    ):
-        assert not _inference_safe(poison), poison
-    # plain text and round-tripping numerics remain safe
-    for ok in ("2024-01-01", "abc", "1", "1.5", "e5", "nano", "infra",
-               "d", "f", "1dd", "x1p3", "0x1p", "id", "worldF",
-               # suffix attaches to numeric literals only in the
-               # Double.valueOf grammar — these stay safe strings
-               "NaNd", "Infinityf",
-               # parseDouble is CASE-SENSITIVE: these throw and stay
-               # safe strings (review finding: the first fix was
-               # IGNORECASE and wrongly blocked merges on them)
-               "nan", "inf", "Inf", "-inf", "INFINITY", "nAn",
-               # wrapped NON-numerics also stay safe strings
-               " abc ", " nan "):
-        assert _inference_safe(ok), ok
 
 
 def test_partitioned_delete_of_last_row_keeps_table_readable(spark, tmp_path):
@@ -362,30 +397,6 @@ def test_partitioned_delete_of_last_row_keeps_table_readable(spark, tmp_path):
     assert [(r["k"], r["v"], r["part"]) for r in spark.read.parquet(t).collect()] == [
         (5, "v5", "p1")
     ]
-
-
-def test_inference_safe_timestamp_and_decimal_overflow_classes():
-    """r13 review: Spark 4.1.2 also infers DATE/TIMESTAMP on partition
-    values (probe matrix in BASELINE.md). The drift class is a padded
-    timestamp with a SINGLE-digit fraction ('.5' reads back '.500000',
-    '.0' loses the fraction); >38-digit integers overflow DECIMAL and
-    infer DOUBLE ('1e+41'). Everything else date-shaped round-trips or
-    stays a string."""
-    from spectraplex_spark.sources.merge import _inference_safe
-
-    for poison in (
-        "2024-01-01 12:34:56.5", "2024-01-01 12:34:56.0",
-        "1999-12-31 23:59:59.9", "9" * 41, "1" * 39,
-    ):
-        assert not _inference_safe(poison), poison
-    for ok in (
-        "2024-01-01", "0001-01-01", "2024-13-01", "2024-1-1",
-        "2024-01-01 12:34:56", "2024-01-01 12:34:56.50",
-        "2024-01-01 12:34:56.500000", "2024-01-01 12:34:56.000000",
-        "2024-01-01T12:34:56", "2024-01-01 12:34", " 2024-01-01",
-        "2024-01-01 2:34:56", "9" * 38,
-    ):
-        assert _inference_safe(ok), ok
 
 
 def test_merge_rejects_schema_drifted_updates(spark, tmp_path):

@@ -73,7 +73,7 @@ def test_asof_no_tolerance_carries_forever(spark):
 
 
 def test_builtin_session_window_equals_manual_gap_split(spark):
-    """The demotion contract for session_window_builtin (r12): Spark's
+    """session_window_builtin and session_stats must agree: Spark's
     native session_window must produce the SAME sessions as the manual
     lag/gap-split build (sessionize) — start = first event, end = last
     event + gap, same membership — including the exact-boundary case
